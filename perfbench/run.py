@@ -1,16 +1,18 @@
 """Seeded end-to-end benchmark for distill_spark.
 
-    python3 perfbench/run.py --workload tool_dedupe --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload serving --seed 1 --seconds 20 --trace 0
     python3 perfbench/run.py --smoke --seed 1
 
 Run from the root of a checkout. One process, one Spark session on
 local[<cpus>], one client with one op in flight. The workload's inputs
 come from --seed alone; every op's output is checked against the
-generator's ground truth. With --trace 0 the last stdout line is the
-end-to-end result; with --trace 1 the run alternates traced and
-untraced ops and reports per-layer metrics from the traced ones, plus
-the tracing overhead. --smoke runs every workload once at tiny sizes
-with all checks and tracing on. Exit code 0 only when every check passed.
+generator's ground truth. A run times whole cycles (one op of every
+kind the workload runs) until --seconds is used, and at least one. With
+--trace 0 the last stdout line is the end-to-end result; with --trace 1
+the run alternates traced and untraced cycles and reports per-layer
+metrics from the traced ones, plus the tracing overhead. --smoke runs
+every op family once at tiny sizes with all checks and tracing on. Exit
+code 0 only when every check passed.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import contextlib
 import json
 import os
 import resource
+import shutil
 import signal
 import statistics
 import sys
@@ -27,45 +30,49 @@ import time
 import traceback
 import uuid
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-BUILD_REPS = {"tool_dedupe": 3, "agent_memory": 1, "impact_graph": 3}
+HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
 DRIVER_MEM = "2g"
 
 END_TO_END = {  # name -> unit
-    "setup_s": "s", "op_p50_s": "s", "items_per_s": "1/s", "peak_rss_mb": "MB"}
+    "setup_s": "s", "cycle_s": "s", "cycle_cpu_s": "s"}
 
-# per-layer metric -> (span name, what): wall = time in the call,
+# per-layer metric -> (span names, what): wall = time in the calls,
 # self = wall minus child spans, jobs = jobs whose innermost span it is
 LAYER = {
-    "api.self_s": ("api", "self"),
-    "api.jobs": ("api", "jobs"),
-    "dedupe.self_s": ("dedupe", "self"),
-    "dedupe.jobs": ("dedupe", "jobs"),
-    "cluster.similarity_edges_s": ("cluster.similarity_edges", "wall"),
-    "cluster.similarity_edges_jobs": ("cluster.similarity_edges", "jobs"),
-    "cluster.connected_components_s": ("cluster.connected_components", "wall"),
-    "cluster.connected_components_jobs": ("cluster.connected_components", "jobs"),
-    "select.select_representatives_s": ("select.select_representatives", "wall"),
-    "mmr.mmr_rerank_s": ("mmr", "wall"),
-    "mmr.jobs": ("mmr", "jobs"),
-    "memory.store_batch_s": ("memory.store_batch", "wall"),
-    "memory.store_batch_jobs": ("memory.store_batch", "jobs"),
-    "memory.recall_s": ("memory.recall", "wall"),
-    "memory.recall_jobs": ("memory.recall", "jobs"),
-    "session.push_batch_s": ("session.push_batch", "wall"),
-    "session.session_context_s": ("session.session_context", "wall"),
-    "embed.s": ("embed", "wall"),
-    "graph.blast_radius_s": ("graph.blast_radius", "wall"),
-    "graph.blast_radius_jobs": ("graph.blast_radius", "jobs"),
-    "pagerank.s": ("pagerank", "wall"),
-    "pagerank.jobs": ("pagerank", "jobs"),
+    "api.self_s": (("api",), "self"),
+    "api.jobs": (("api",), "jobs"),
+    "dedupe.self_s": (("dedupe",), "self"),
+    "dedupe.jobs": (("dedupe",), "jobs"),
+    "pipeline.self_s": (("pipeline",), "self"),
+    "pipeline.sink_s": (("pipeline.sink",), "wall"),
+    "cluster.similarity_edges_s": (("cluster.similarity_edges",), "wall"),
+    "cluster.similarity_edges_jobs": (("cluster.similarity_edges",), "jobs"),
+    "cluster.connected_components_s": (("cluster.connected_components",), "wall"),
+    "cluster.connected_components_jobs": (("cluster.connected_components",), "jobs"),
+    "select.select_representatives_s": (("select.select_representatives",), "wall"),
+    "mmr.mmr_rerank_s": (("mmr",), "wall"),
+    "mmr.jobs": (("mmr",), "jobs"),
+    "kmeans.call_s": (("kmeans",), "wall"),
+    "kmeans.action_s": (("kmeans.action",), "wall"),
+    "kmeans.jobs": (("kmeans", "kmeans.action"), "jobs"),
+    "memory.store_batch_s": (("memory.store_batch",), "wall"),
+    "memory.store_batch_jobs": (("memory.store_batch",), "jobs"),
+    "memory.recall_s": (("memory.recall",), "wall"),
+    "memory.recall_jobs": (("memory.recall",), "jobs"),
+    "session.push_batch_s": (("session.push_batch",), "wall"),
+    "session.session_context_s": (("session.session_context",), "wall"),
+    "embed.s": (("embed",), "wall"),
+    "graph.blast_radius_s": (("graph.blast_radius", "graph.collect"), "wall"),
+    "graph.blast_radius_jobs": (("graph.blast_radius", "graph.collect"), "jobs"),
+    "pagerank.s": (("pagerank", "pagerank.collect"), "wall"),
+    "pagerank.jobs": (("pagerank", "pagerank.collect"), "jobs"),
 }
 SPARK = ("jobs", "stages", "tasks", "executor_run_s", "executor_cpu_s",
          "jvm_gc_s", "shuffle_write_bytes")
-OTHER_LAYER = ("runtime.get_spark_s", "cluster.edges",
+OTHER_LAYER = ("runtime.get_spark_s", "compress.extractive_s", "cluster.edges",
                "memory.bytes_written_per_user_byte", "memory.snapshot_files",
-               "spark.driver_s", "trace.overhead_s", "host.steal_s",
-               "host.load1")
+               "spark.driver_s", "trace.overhead_s")
 
 
 def unit_of(metric: str) -> str:
@@ -73,13 +80,13 @@ def unit_of(metric: str) -> str:
         return "s"
     if metric.endswith("_bytes"):
         return "bytes"
-    if metric in ("memory.bytes_written_per_user_byte", "host.load1"):
+    if metric == "memory.bytes_written_per_user_byte":
         return "ratio"
     return "count"
 
 
 def per_layer_names() -> list[str]:
-    return (list(LAYER) + [f"spark.{k}" for k in SPARK] + list(OTHER_LAYER))
+    return list(LAYER) + [f"spark.{k}" for k in SPARK] + list(OTHER_LAYER)
 
 
 def tail(values: list[float]):
@@ -128,6 +135,21 @@ def descendants(pid: int) -> set[int]:
     return out
 
 
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process, the JVM and the Python
+    workers (live ones from /proc, ended ones through their parents)."""
+    total = sum(os.times()[:4])
+    ticks = 0
+    for pid in descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        ticks += sum(int(x) for x in fields[11:15])
+    return total + ticks / os.sysconf("SC_CLK_TCK")
+
+
 def files_by_inode(path: str) -> dict[int, int]:
     out = {}
     for d, _, names in os.walk(path):
@@ -155,98 +177,107 @@ class Run:
         })
         self.session_s = time.perf_counter() - t
         self.sc = self.spark.sparkContext
+        self.sc.setLogLevel("ERROR")
         self.jvm_pid = self.sc._gateway.proc.pid
-        self.tracer = self.counters = None
+        self.tracer = self.counters = self.profile = None
         if trace:
-            from spans import SparkCounters, Tracer
+            import workloads
+            from spans import SparkCounters, Tracer, UdfProfile
 
             self.tracer = Tracer(self.sc)
             self.tracer.install()
+            workloads.span = self.tracer.span
             self.counters = SparkCounters(self.sc)
+            self.profile = UdfProfile(self.spark, "textproc.py",
+                                      "extractive_compress")
 
     def workload(self, name: str, seed: int, seconds: float, smoke: bool) -> dict:
-        from workloads import WORKLOADS
+        from workloads import FAMILIES, WORKLOADS
 
-        wl = WORKLOADS[name](self.spark, os.path.join(self.work, name),
-                             seed, smoke)
-        builds = []
-        for r in range(1 if smoke else BUILD_REPS[name]):
+        names = WORKLOADS[name]
+        fams = [FAMILIES[f](self.spark, os.path.join(self.work, name, f),
+                            seed, smoke, len(names) == 1) for f in names]
+        setup_parts = {"session": self.session_s}
+        for fam in fams:
             t = time.perf_counter()
-            wl.build(f"b{r}")
-            builds.append(time.perf_counter() - t)
-        surface = getattr(wl, "surface", None)
-        if self.tracer is not None and surface is not None:
-            self.tracer.wrap_attr(surface, "_embed", "embed")
-        t = time.perf_counter()
-        _, _, warm_fails = wl.op(-1)
-        warm_s = time.perf_counter() - t
+            fam.build()
+            setup_parts[fam.name] = time.perf_counter() - t
+            surface = getattr(fam, "surface", None)
+            if self.tracer is not None and surface is not None:
+                self.tracer.wrap_attr(surface, "_embed", "embed")
         if self.counters is not None:
             self.counters.harvest()  # set-up jobs belong to no op
-        setup_s = self.session_s + statistics.median(builds) + warm_s
+        setup_s = sum(setup_parts.values())
 
-        rows, fails = [], list(warm_fails)
+        cycle = [(fam, kind) for fam in fams for kind in fam.kinds]
+        cycles, fails = [], []
         steal0, t0 = steal_ticks(), time.perf_counter()
-        i = 0
         while True:
-            # a traced run alternates whole cycles, so the traced and the
-            # untraced ops see the same input mix
-            traced = self.trace and (i // wl.cycle) % 2 == 0
-            rows.append(self._op(wl, i, traced))
-            fails += rows[-1]["fails"]
-            i += 1
-            if i % wl.cycle or (self.trace and i < 2 * wl.cycle):
+            # a traced run is three cycles: the first (it pays first-use
+            # costs, like the one an untraced run times) untraced, then
+            # a traced one and an untraced one on the same input mix
+            traced = self.trace and len(cycles) == 1
+            rows = [self._op(fam, kind, len(cycles), traced)
+                    for fam, kind in cycle]
+            cycles.append({"traced": traced, "rows": rows,
+                           "wall": sum(r["wall"] for r in rows),
+                           "cpu": sum(r["cpu"] for r in rows)})
+            for r in rows:
+                fails += r["fails"]
+            if self.trace:
+                if len(cycles) == 3:
+                    break
                 continue
-            # runs end on a cycle boundary, before a cycle that would
-            # likely overrun the window
+            # stop before a cycle that would likely overrun the window
             left = seconds - (time.perf_counter() - t0)
-            typical = statistics.median(r["wall"] for r in rows)
-            if left < wl.cycle * typical:
+            if left < statistics.median(c["wall"] for c in cycles):
                 break
         window_s = time.perf_counter() - t0
         steal_s = (steal_ticks() - steal0) / os.sysconf("SC_CLK_TCK")
-        return {"workload": name, "seed": seed, "rows": rows,
-                "fails": fails, "setup_s": setup_s, "builds_s": builds,
-                "warm_s": warm_s, "window_s": window_s,
+        return {"workload": name, "seed": seed, "cycles": cycles,
+                "fails": fails, "setup_s": setup_s, "setup_parts": setup_parts,
+                "window_s": window_s,
                 "steal_s": steal_s, "load1": os.getloadavg()[0],
-                "op_types": wl.op_types, "store_dir": getattr(wl, "store_dir", None)}
+                "families": fams}
 
-    def _op(self, wl, i: int, traced: bool) -> dict:
-        tr, key = self.tracer, f"{wl.name}:{i}"
-        before = (files_by_inode(wl.store_dir) if traced and getattr(
-            wl, "store_dir", None) else None)
-        if tr is not None:
-            tr.active, tr.op = traced, key
+    def _op(self, fam, kind: str, c: int, traced: bool) -> dict:
+        tr, key = self.tracer, f"{fam.name}:{kind}:{c}"
+        store = getattr(fam, "store_dir", None) if traced else None
+        before = files_by_inode(store) if store else None
+        if traced:
+            tr.active, tr.op = True, key
+            self.profile.start()
+        cpu0 = tree_cpu_s()
         try:
             with (tr.span("op") if tr is not None else contextlib.nullcontext()):
-                parts, items, fails = wl.op(i)
+                wall, items, fails = fam.op(kind, c)
         finally:
             if tr is not None:
                 tr.active = False
-        row = {"op": i, "traced": traced, "parts": parts,
-               "wall": sum(parts.values()), "items": items, "fails": fails}
+        row = {"family": fam.name, "kind": kind, "wall": wall,
+               "cpu": tree_cpu_s() - cpu0, "items": items, "fails": fails}
         if tr is None:
             return row
         jobs = self.counters.harvest()
-        if not traced:
-            return row
-        row["layer"] = self._layer(wl, key, jobs, row["wall"], before)
-        row["jobs"] = jobs
+        if traced:
+            row["layer"] = self._layer(fam, key, jobs, wall, before)
+            row["jobs"] = jobs
         return row
 
-    def _layer(self, wl, key: str, jobs: list[dict], wall: float, before) -> dict:
+    def _layer(self, fam, key: str, jobs: list[dict], wall: float, before) -> dict:
         from spans import self_seconds, union_seconds
 
+        out = {"compress.extractive_s": self.profile.stop()}
         spans = [s for s in self.tracer.spans if s["op"] == key]
         name_of = {s["id"]: s["name"] for s in spans}
         selfs = self_seconds(spans)
-        out = {m: 0.0 for m in LAYER}
-        for m, (span, what) in LAYER.items():
+        for m, (names, what) in LAYER.items():
             if what == "jobs":
-                out[m] = sum(1 for j in jobs if name_of.get(j["group"]) == span)
+                out[m] = sum(1 for j in jobs if name_of.get(j["group"]) in names)
             else:
                 out[m] = sum(selfs[s["id"]] if what == "self"
                              else s["end"] - s["start"]
-                             for s in spans if s["name"] == span)
+                             for s in spans if s["name"] in names)
         out["spark.jobs"] = len(jobs)
         for k in SPARK[1:]:
             out[f"spark.{k}"] = sum(j[k] for j in jobs)
@@ -262,14 +293,13 @@ class Run:
         self.counters.harvest()
         for s in spans:
             s.pop("result", None)
+        out["memory.bytes_written_per_user_byte"] = 0.0
+        out["memory.snapshot_files"] = 0
         if before is not None:
-            after = files_by_inode(wl.store_dir)
+            after = files_by_inode(fam.store_dir)
             new = sum(sz for ino, sz in after.items() if ino not in before)
-            out["memory.bytes_written_per_user_byte"] = new / max(wl.user_bytes, 1)
+            out["memory.bytes_written_per_user_byte"] = new / max(fam.user_bytes, 1)
             out["memory.snapshot_files"] = len(after)
-        else:
-            out["memory.bytes_written_per_user_byte"] = 0.0
-            out["memory.snapshot_files"] = 0
         return out
 
     def close(self) -> None:
@@ -316,32 +346,64 @@ def _zombie(pid: int) -> bool:
         return True
 
 
+def op_metrics(res: dict, plain: list[dict]) -> dict:
+    """The per-family figures of the untraced cycles, under the names a
+    user of each tool knows them by."""
+    rows = [r for c in plain for r in c["rows"]]
+    out = {}
+
+    def walls(fam, kind=None):
+        return [r["wall"] for r in rows
+                if r["family"] == fam and kind in (None, r["kind"])]
+
+    for fam in res["families"]:
+        f = fam.name
+        if f == "tool_dedupe":
+            w = walls(f)
+            out["call_p50_s"] = statistics.median(w)
+            out["call_tail_s"] = tail(w)
+            out["chunks_per_s"] = sum(
+                r["items"] for r in rows if r["family"] == f) / sum(w)
+        elif f == "corpus_distill":
+            out["pipeline_p50_s"] = statistics.median(walls(f, "pipeline"))
+            out["kmeans_p50_s"] = statistics.median(walls(f, "kmeans"))
+            out["corpus_chunks_per_s"] = sum(
+                r["items"] for r in rows if r["family"] == f) / sum(walls(f))
+            out["dup_recall"] = fam.dup_recall
+        elif f == "agent_memory":
+            for part in ("push", "store", "recall", "context"):
+                out[f"{part}_p50_s"] = statistics.median(fam.parts[part])
+            for kind in fam.kinds:
+                out[f"{kind}_p50_s"] = statistics.median(walls(f, kind))
+            out["turn_tail_s"] = tail(walls(f))
+        elif f == "impact_graph":
+            out["blast_radius_p50_s"] = statistics.median(walls(f, "blast_radius"))
+            out["pagerank_p50_s"] = statistics.median(walls(f, "pagerank"))
+    return out
+
+
 def summarize(res: dict, run: Run, trace: bool) -> dict:
-    rows = res["rows"]
-    walls = [r["wall"] for r in rows if not r["traced"]] or [r["wall"] for r in rows]
-    plain = [r for r in rows if not r["traced"]] or rows
+    cycles = res["cycles"]
+    plain = [c for c in cycles if not c["traced"]] or cycles
+    rows = [r for c in cycles for r in c["rows"]]
     attempted = len(rows)
     failed = sum(1 for r in rows if r["fails"])
-    human = {"setup_s": res["setup_s"], "failed_frac": failed / attempted,
-             "op_p50_s": statistics.median(walls),
-             "items_per_s": sum(r["items"] for r in plain) / sum(r["wall"] for r in plain)}
-    for t in res["op_types"]:
-        human[f"{t}_p50_s"] = statistics.median(r["parts"][t] for r in plain)
-    tv, tp = tail(walls)
-    human["op_tail_s"] = tv
-    human["op_tail_pct"] = tp
     py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-    human["peak_rss_mb"] = (py_kb + vm_hwm_kb(run.jvm_pid)) / 1024.0
+    human = {"setup_s": res["setup_s"],
+             "cycle_s": statistics.median(c["wall"] for c in plain),
+             "cycle_cpu_s": statistics.median(c["cpu"] for c in plain),
+             "peak_rss_mb": (py_kb + vm_hwm_kb(run.jvm_pid)) / 1024.0,
+             "failed_frac": failed / attempted}
+    human.update(op_metrics(res, plain))
     if trace:
-        traced = [r["layer"] for r in rows if r["traced"]]
-        metrics = {m: statistics.median(t[m] for t in traced)
-                   for m in traced[0]}
+        # per-layer figures are per cycle: the sum over the cycle's ops
+        per_cycle = [{m: sum(r["layer"][m] for r in c["rows"])
+                      for m in c["rows"][0]["layer"]}
+                     for c in cycles if c["traced"]]
+        metrics = {m: statistics.median(p[m] for p in per_cycle)
+                   for m in per_cycle[0]}
         metrics["runtime.get_spark_s"] = run.session_s
-        metrics["trace.overhead_s"] = (
-            statistics.median(r["wall"] for r in rows if r["traced"])
-            - statistics.median(r["wall"] for r in rows if not r["traced"]))
-        metrics["host.steal_s"] = res["steal_s"]
-        metrics["host.load1"] = res["load1"]
+        metrics["trace.overhead_s"] = cycles[1]["wall"] - cycles[2]["wall"]
         metrics = {m: metrics[m] for m in per_layer_names()}
     else:
         metrics = {m: human[m] for m in END_TO_END}
@@ -349,39 +411,27 @@ def summarize(res: dict, run: Run, trace: bool) -> dict:
             "failed": failed, "human": human, "metrics": metrics}
 
 
-LABELS = {  # workload-specific names the generic metrics are printed under
-    "tool_dedupe": {"items_per_s": "chunks_per_s", "op_tail_s": "call_tail_s"},
-    "agent_memory": {"op_p50_s": "turn_p50_s", "items_per_s": "turns_per_s",
-                     "op_tail_s": "turn_tail_s"},
-    "impact_graph": {"op_p50_s": "round_p50_s", "items_per_s": "edges_per_s",
-                     "op_tail_s": "round_tail_s"},
-}
-
-
 def report(res: dict, out: dict) -> None:
-    h = out["human"]
-    names = LABELS[res["workload"]]
-    for k, v in h.items():
-        label = names.get(k, k)
-        if k == "op_tail_pct":
+    w = res["workload"]
+    for k, v in out["human"].items():
+        if k.endswith("_tail_s"):
+            v, pct = v
+            print(f"{w} {k} = " + (f"{v:.6g} s (p{pct:.0f})" if v is not None
+                                   else "n/a (needs 11 samples)"))
             continue
-        if k == "op_tail_s":
-            extra = (f" (p{h['op_tail_pct']:.0f})" if v is not None
-                     else " (n/a: needs 11 samples)")
-            print(f"{res['workload']} {label} = {v if v is not None else 'n/a'} s{extra}")
-            continue
-        unit = "1/s" if k == "items_per_s" else "MB" if k == "peak_rss_mb" \
-            else "" if k == "failed_frac" else "s"
-        print(f"{res['workload']} {label} = {v:.6g} {unit}".rstrip())
-    print(f"{res['workload']} ops = {out['attempted']} (window {res['window_s']:.1f} s)"
-          f"; host steal {res['steal_s']:.2f} s, load1 {res['load1']:.2f}")
+        unit = ("1/s" if k.endswith("per_s") else "MB" if k.endswith("_mb")
+                else "s" if k.endswith("_s") else "")
+        print(f"{w} {k} = {v:.6g} {unit}".rstrip())
+    print(f"{w} ops = {out['attempted']} in {len(res['cycles'])} cycles "
+          f"(window {res['window_s']:.1f} s); host steal {res['steal_s']:.2f} s,"
+          f" load1 {res['load1']:.2f}")
     for f in res["fails"][:10]:
-        print(f"{res['workload']} CHECK FAILED: {f}")
+        print(f"{w} CHECK FAILED: {f}")
 
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", default="tool_dedupe")
+    ap.add_argument("--workload", default="serving")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -391,10 +441,10 @@ def main(argv=None) -> int:
     if not os.path.isfile(os.path.join(ROOT, "distill_spark", "__init__.py")):
         print(f"perfbench: no distill_spark package under {ROOT}", file=sys.stderr)
         return 2
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from workloads import WORKLOADS
+    sys.path.insert(0, HERE)
+    from workloads import FAMILIES, WORKLOADS
 
-    names = list(WORKLOADS) if args.smoke else [args.workload]
+    names = list(FAMILIES) if args.smoke else [args.workload]
     if any(n not in WORKLOADS for n in names):
         print(f"perfbench: unknown workload {args.workload!r}; "
               f"choose from {', '.join(WORKLOADS)}", file=sys.stderr)
@@ -436,18 +486,16 @@ def main(argv=None) -> int:
     finally:
         if run is not None:
             run.close()
-        import shutil
-
         shutil.rmtree(work, ignore_errors=True)
-    if not args.smoke:
+    if args.smoke:
+        print(f"smoke: {'all checks passed' if ok else 'CHECKS FAILED'}")
+    else:
         print(json.dumps({
             "correct": ok, "attempted": last["attempted"],
             "failed": last["failed"],
             "metrics": {m: {"value": v, "unit": unit_of(m) if trace
                             else END_TO_END[m]}
                         for m, v in last["metrics"].items()}}))
-    else:
-        print(f"smoke: {'all checks passed' if ok else 'CHECKS FAILED'}")
     return 0 if ok else 1
 
 
@@ -456,6 +504,7 @@ def write_record(res: dict, out: dict, args, run: Run) -> None:
     checkout's other outputs, for later diffing."""
     d = os.path.join(ROOT, ".perfbench_out")
     os.makedirs(d, exist_ok=True)
+    res = {k: v for k, v in res.items() if k != "families"}
     rec = {"args": vars(args), "result": res, "summary": out,
            "spans": run.tracer.spans if run.tracer is not None else None}
     path = os.path.join(d, f"{res['workload']}-seed{args.seed}-trace"

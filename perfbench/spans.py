@@ -7,7 +7,8 @@ imported) for a wrapper that opens a span. A span records name, start,
 end, parent and op id, and sets the Spark job group to its own id, so
 each job lands on the innermost open span. ``SparkCounters`` reads the
 jobs and stages back from the SparkContext status store, which Spark
-keeps even with the UI disabled.
+keeps even with the UI disabled. ``UdfProfile`` reads the time spent in
+one function inside the pandas-UDF workers from Spark's UDF profiler.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ TARGETS = [
     ("distill_spark.api", "ToolSurface.recall_memory", "api"),
     ("distill_spark.api", "ToolSurface.push_session", "api"),
     ("distill_spark.api", "ToolSurface.session_context", "api"),
+    ("distill_spark.plans.pipeline", "run_pipeline", "pipeline"),
     ("distill_spark.plans.dedupe", "dedupe", "dedupe"),
     ("distill_spark.operators.cluster", "similarity_edges",
      "cluster.similarity_edges"),
@@ -34,6 +36,7 @@ TARGETS = [
     ("distill_spark.operators.select", "select_representatives",
      "select.select_representatives"),
     ("distill_spark.operators.mmr", "mmr_rerank", "mmr"),
+    ("distill_spark.operators.kmeans_dedup", "kmeans_dedup", "kmeans"),
     ("distill_spark.memory", "MemoryStore.store_batch", "memory.store_batch"),
     ("distill_spark.memory", "MemoryStore.recall", "memory.recall"),
     ("distill_spark.session", "push_batch", "session.push_batch"),
@@ -126,6 +129,33 @@ class _Span:
         if self.rec is not None:
             self.tracer._close(self.rec)
         return False
+
+
+class UdfProfile:
+    """Time inside one Python function that runs in the pandas-UDF
+    workers, read from Spark's own UDF profiler (``perf``, cProfile in
+    the worker, results shipped back with the task). Turned on only
+    while a traced op runs."""
+
+    CONF = "spark.sql.pyspark.udf.profiler"
+
+    def __init__(self, spark, module_file: str, func: str):
+        self.spark, self.file, self.func = spark, module_file, func
+
+    def start(self) -> None:
+        self.spark.profile.clear()
+        self.spark.conf.set(self.CONF, "perf")
+
+    def stop(self) -> float:
+        """Seconds spent in the function (cumulative, all workers)."""
+        self.spark.conf.unset(self.CONF)
+        total = 0.0
+        for st in self.spark._profiler_collector._perf_profile_results.values():
+            for (path, _, name), (_, _, _, cum, _) in st.stats.items():
+                if name == self.func and path.endswith(self.file):
+                    total += cum
+        self.spark.profile.clear()
+        return total
 
 
 def self_seconds(spans: list[dict]) -> dict[str, float]:
